@@ -402,8 +402,7 @@ class CDCPipeline:
     def estimate(self, where: str, version: int | None = None) -> dict:
         """Metadata-only cardinality bounds for a predicate — `lower <=
         count(live rows matching where) <= upper` from the manifest alone
-        (see `lake/scan.py:estimate_rows`; the only job is the tiny
-        literal-hash probe when key equalities allow bucket pruning)."""
+        (see `lake/scan.py:estimate_rows`; no Spark job)."""
         from kf_etl_clin_portal_spark.lake.scan import estimate_rows
 
         return estimate_rows(self.spark, self.table, where, version=version)

@@ -51,6 +51,7 @@ from kf_etl_clin_portal_spark.lake.table import (
     CommitConflict,
     SnapshotTable,
     bucket_expr,
+    key_buckets,
     retry_on_conflict,
 )
 
@@ -599,10 +600,12 @@ def lookup_keys(
     its participant-id lookups go through Elasticsearch instead).
 
     ``keys``: list of {key_col: value} dicts (all key columns required).
-    The bucket ids are computed with the table's own partition transform
-    (``bucket_expr`` over a tiny literal DataFrame — exactly Spark's
-    murmur3, no Python reimplementation to drift), so at 10^10 rows a
-    k-key lookup scans k buckets of data, not the table: manifest-pruned
+    The bucket ids are computed on the driver by `lake/table.py:key_buckets`
+    — a copy of the partition transform ``bucket_expr`` (Spark's murmur3,
+    typed by the snapshot's key schema), held equal to Spark's own
+    evaluation by the property test `tests/test_bucket_route.py` — so no
+    Spark job runs before the read, and at 10^10 rows a k-key lookup
+    scans k buckets of data, not the table: manifest-pruned
     file list + equality predicates pushed into the parquet scan for
     row-group skipping within them. MoR deltas for those buckets are
     resolved the same way `read_merged` does — but only over the pruned
@@ -612,31 +615,32 @@ def lookup_keys(
     branch per key); for bulk key sets join a keys DataFrame against
     `read_merged` instead — that's a broadcast semi-join, not a lookup."""
     table.refresh()
-    key_cols = table.key_cols
+    if ref is not None:
+        version = table.resolve_ref(ref)
+    st = table.state if version is None else table.state_at(version)
+    key_cols = st["partition"]["key"]
     for k in keys:
         missing = [c for c in key_cols if c not in k]
         if missing:
             raise ValueError(f"lookup key {k} missing key column(s) {missing}")
-    probe = spark.createDataFrame(
-        [tuple(k[c] for c in key_cols) for k in keys], schema=key_cols
+    schema = table.schema_for(st["current_schema_id"])
+    # None (a key type or value the driver-side hash does not cover) reads
+    # every bucket: slower, never wrong
+    buckets = key_buckets(
+        [schema[c].dataType for c in key_cols],
+        [tuple(k[c] for c in key_cols) for k in keys],
+        st["partition"]["num_buckets"],
     )
-    wanted = probe.select(
-        bucket_expr(key_cols, table.num_buckets).alias("b")
-    ).distinct()
-    buckets = sorted(r[0] for r in wanted.collect())  # ≤ len(keys) ints
 
-    df = table.read(spark, version=version, ref=ref, buckets=buckets)
+    df = table.read(spark, version=version, buckets=buckets)
     pred = F.lit(False)
     for k in keys:
         conj = _and_all([F.col(c) == F.lit(k[c]) for c in key_cols])
         pred = pred | conj
     df = df.where(pred)
-    if ref is not None:
-        version = table.resolve_ref(ref)
-    st = table.state if version is None else table.state_at(version)
-    bset = set(buckets)
     has_deltas = any(
-        f.get("kind") == "delta" and f["bucket"] in bset for f in st["files"]
+        f.get("kind") == "delta" and (buckets is None or f["bucket"] in buckets)
+        for f in st["files"]
     )
     if not has_deltas:
         return df

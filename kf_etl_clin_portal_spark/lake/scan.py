@@ -13,11 +13,14 @@ can matter —
    (BETWEEN's inner AND respected; any top-level OR / NOT disables
    pruning — never the result);
 2. equality / IN conjuncts that cover EVERY table key column become
-   bucket pruning: the literal key tuples are hashed with the table's own
-   partition transform (`bucket_expr` over a one-collect literal frame —
-   Spark's murmur3, nothing reimplemented to drift, cast to the table key
-   types first), so a point/point-set predicate reads O(k) buckets of a
-   10^10-row table;
+   bucket pruning: the literal key tuples are hashed on the driver by
+   `lake/table.py:key_buckets`, the copy of the table's partition transform
+   `bucket_expr` (Spark's murmur3, typed by the table's key schema) that
+   the property test `tests/test_bucket_route.py` holds equal to Spark's
+   own evaluation — no Spark job — so a point/point-set predicate reads
+   O(k) buckets of a 10^10-row table.  A literal whose Python type does
+   not match its key column's type exactly (``k = 5.0`` on a long key,
+   ``k = 5`` on a string key) prunes nothing;
 3. range / equality conjuncts on zone-mapped columns (`stats.columns`
    table property) become a manifest file filter — whole files skipped
    from metadata alone;
@@ -56,7 +59,7 @@ from kf_etl_clin_portal_spark.lake.spj import _pin, _schema_at
 from kf_etl_clin_portal_spark.lake.table import (
     SnapshotTable,
     _file_may_match,
-    bucket_expr,
+    key_buckets,
 )
 
 _TOKEN_RE = re.compile(
@@ -267,8 +270,8 @@ def plan_scan(
     max_key_combos: int = 1024,
 ) -> dict[str, Any]:
     """Derive (buckets, stats_filter) from ``where`` at a pinned snapshot;
-    metadata-only except one tiny literal-hash job when key equalities
-    allow bucket pruning.  See module docstring for the rules."""
+    metadata-only, no Spark job (key literals are hashed on the driver).
+    See module docstring for the rules."""
     v = _pin(table, version, ref)
     st = table.state_at(v)
     files = st["files"]
@@ -294,19 +297,16 @@ def plan_scan(
         return plan
 
     # ---- bucket pruning: every key col equality-constrained ------------
-    key_cols = list(table.key_cols)
+    key_cols = st["partition"]["key"]
+    num_buckets = st["partition"]["num_buckets"]
     if all(col in cons.eq for col in key_cols):
-        combos = list(itertools.product(*[sorted(cons.eq[c]) for c in key_cols]))
+        combos = list(itertools.product(*[cons.eq[c] for c in key_cols]))
         if 0 < len(combos) <= max_key_combos:
             schema = _schema_at(table, v)
-            probe = spark.createDataFrame(combos, schema=key_cols).select(
-                *[F.col(c).cast(schema[c].dataType).alias(c) for c in key_cols]
+            buckets = key_buckets(
+                [schema[c].dataType for c in key_cols], combos, num_buckets
             )
-            wanted = probe.select(
-                bucket_expr(key_cols, table.num_buckets).alias("b")
-            ).distinct()
-            buckets = sorted(r[0] for r in wanted.collect())
-            if len(buckets) <= max_bucket_frac * table.num_buckets:
+            if buckets is not None and len(buckets) <= max_bucket_frac * num_buckets:
                 plan["buckets"] = buckets
 
     # ---- zone-map file skipping (all-base snapshots only) --------------
@@ -376,8 +376,7 @@ def estimate_rows(
     """Metadata-only cardinality BOUNDS for a predicate — the Iceberg
     ``estimateStatistics`` analog, for monitoring probes and join-side
     planning decisions (broadcast or not, prune or not) that must not cost
-    a 100 TB cluster scan. No data I/O; the only job is `plan_scan`'s tiny
-    literal-hash probe when key equalities allow bucket pruning.
+    a 100 TB cluster scan. No data I/O and no Spark job.
 
     Returns ``upper`` / ``lower`` such that
 

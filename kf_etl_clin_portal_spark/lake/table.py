@@ -52,6 +52,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import struct
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -87,8 +88,121 @@ def bucket_expr(key_cols: list[str], num_buckets: int):
     partition equal to its bucket, so a bucket-wise file layout falls out of
     the aggregation shuffle with NO second repartition (`lake/merge.py`).
     JVM codegen'd, no Python in the hot path.
+
+    `key_buckets` is the driver-side copy of this transform for literal
+    keys (point lookups, scan planning) — no Spark job; held equal to this
+    expression by `tests/test_bucket_route.py`.
     """
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
+
+
+# ---- driver-side copy of bucket_expr ---------------------------------------
+# Spark's Murmur3Hash (Murmur3_x86_32, seed 42) on unsigned 32-bit words.
+_M32 = 0xFFFFFFFF
+_HASH_SEED = 42
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType)  # all hashed via hashInt
+
+
+def _mix_k1(k1: int) -> int:
+    k1 = (k1 * 0xCC9E2D51) & _M32
+    k1 = ((k1 << 15) | (k1 >> 17)) & _M32
+    return (k1 * 0x1B873593) & _M32
+
+
+def _mix_h1(h1: int, k1: int) -> int:
+    h1 ^= k1
+    h1 = ((h1 << 13) | (h1 >> 19)) & _M32
+    return (h1 * 5 + 0xE6546B64) & _M32
+
+
+def _fmix(h1: int, length: int) -> int:
+    h1 ^= length
+    h1 ^= h1 >> 16
+    h1 = (h1 * 0x85EBCA6B) & _M32
+    h1 ^= h1 >> 13
+    h1 = (h1 * 0xC2B2AE35) & _M32
+    return h1 ^ (h1 >> 16)
+
+
+def _hash_int(v: int, h1: int) -> int:
+    return _fmix(_mix_h1(h1, _mix_k1(v & _M32)), 4)
+
+
+def _hash_long(v: int, h1: int) -> int:
+    h1 = _mix_h1(h1, _mix_k1(v & _M32))
+    h1 = _mix_h1(h1, _mix_k1((v >> 32) & _M32))
+    return _fmix(h1, 8)
+
+
+def _hash_utf8(s: str, h1: int) -> int:
+    """``hashUnsafeBytes``: little-endian 4-byte words, then each tail byte
+    mixed on its own as a SIGNED byte (Spark's legacy tail, not the
+    reference Murmur3 tail)."""
+    b = s.encode("utf-8")
+    aligned = len(b) - len(b) % 4
+    for (w,) in struct.iter_unpack("<I", b[:aligned]):
+        h1 = _mix_h1(h1, _mix_k1(w))
+    for x in b[aligned:]:
+        h1 = _mix_h1(h1, _mix_k1((x - 256 if x > 127 else x) & _M32))
+    return _fmix(h1, len(b))
+
+
+def _is_str(v: Any) -> bool:
+    return isinstance(v, str)
+
+
+def _is_int32(v: Any) -> bool:
+    return type(v) is int and -(1 << 31) <= v < (1 << 31)
+
+
+def _is_int64(v: Any) -> bool:
+    return type(v) is int and -(1 << 63) <= v < (1 << 63)
+
+
+def _component_hash(dt: T.DataType):
+    """(hash step, accepted Python values) for a key column of type ``dt``,
+    or None when the type is not ported. A byte/short column accepts any
+    int32: a value outside its range matches no stored row, so any bucket
+    is right for it."""
+    if dt == T.StringType():  # UTF8_BINARY only: collated strings hash differently
+        return _hash_utf8, _is_str
+    if isinstance(dt, _INT_TYPES):
+        return _hash_int, _is_int32
+    if isinstance(dt, T.LongType):
+        return _hash_long, _is_int64
+    return None
+
+
+def key_buckets(
+    key_types: list[T.DataType], keys: list[tuple], num_buckets: int
+) -> list[int] | None:
+    """Sorted distinct buckets of literal key tuples — `bucket_expr`
+    evaluated on the driver, no Spark job. Each component is hashed by the
+    key column's TYPE (``key_types``), never by its Python value's type:
+    byte/short/int go through ``hashInt``, long through ``hashLong``,
+    strings as UTF-8 bytes; null components are skipped, as in Spark.
+
+    Returns None — read every bucket — when a key column's type is not
+    ported or a value does not fit it exactly (a float for a long column,
+    an int for a string column, a long for an int column): such a key
+    costs a full scan, never a dropped row."""
+    steps = [_component_hash(dt) for dt in key_types]
+    if any(s is None for s in steps):
+        return None
+    out: set[int] = set()
+    for key in keys:
+        h1 = _HASH_SEED
+        for (hash_fn, accepts), v in zip(steps, key):
+            if v is None:
+                continue
+            if not accepts(v):
+                return None
+            try:
+                h1 = hash_fn(v, h1)
+            except UnicodeEncodeError:  # lone surrogate: no UTF-8 form
+                return None
+        out.add((h1 - (1 << 32) if h1 >> 31 else h1) % num_buckets)
+    return sorted(out)
 
 
 @dataclass

@@ -8,11 +8,12 @@ the inline derivation, and independence of the two gates' results from
 the sharing (each keeps its own temp table and fenced merges).
 """
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 

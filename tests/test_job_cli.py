@@ -424,10 +424,10 @@ def test_run_ingest_cli_batch_dlq_and_patch(tmp_path):
     (topic / "seg0.txt").write_text("\n".join(rows) + "\n")
 
     env = dict(os.environ, SPARK_GRAFT_MASTER="local[4]",
-               PYTHONPATH="/root/repo")
+               PYTHONPATH=REPO)
     payload = "repo string, path string, lang string, content string"
     r1 = subprocess.run(
-        [sys.executable, "/root/repo/jobs/run_ingest.py",
+        [sys.executable, os.path.join(REPO, "jobs", "run_ingest.py"),
          "--topic", str(topic), "--format", "text",
          "--payload", payload, "--keys", "repo,path",
          "--table", str(tmp_path / "t"), "--buckets", "4",
@@ -449,7 +449,7 @@ def test_run_ingest_cli_batch_dlq_and_patch(tmp_path):
         ' "op": "u", "ts_ms": 3, "source": {"lsn": 3}}\n'
     )
     r2 = subprocess.run(
-        [sys.executable, "/root/repo/jobs/run_ingest.py",
+        [sys.executable, os.path.join(REPO, "jobs", "run_ingest.py"),
          "--topic", str(topic2), "--format", "text",
          "--payload", payload, "--keys", "repo,path",
          "--table", str(tmp_path / "t"), "--buckets", "4",

@@ -96,3 +96,73 @@ def test_lookup_missing_key_column_raises(spark, tmp_path):
     pipe = _build(spark, tmp_path, "union_agg")
     with pytest.raises(ValueError, match="missing key column"):
         lookup_keys(spark, pipe.table, [{"repo": "only-half-the-key"}])
+
+
+def test_lookup_int_key_reads_the_right_buckets(spark, tmp_path):
+    """Keys are hashed by the key column's type: a Python int looked up in
+    an IntegerType column goes through Spark's hashInt, not the hashLong a
+    LongType literal would get — otherwise most rows are silently missed."""
+    from kf_etl_clin_portal_spark.lake.load import append
+    from kf_etl_clin_portal_spark.lake.table import SnapshotTable
+
+    df = spark.range(200).select(
+        F.col("id").cast("int").alias("pid"),
+        F.col("id").alias("seq"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("val"),
+    )
+    t = SnapshotTable.create(str(tmp_path / "ik"), df.schema, key_cols=["pid"], num_buckets=16)
+    append(spark, t, df)
+    ids = list(range(0, 200, 20))
+    got = {(r["pid"], r["val"]) for r in lookup_keys(spark, t, [{"pid": i} for i in ids]).collect()}
+    assert got == {(i, f"v{i}") for i in ids}
+
+
+def test_lookup_pinned_version_routes_with_that_snapshots_layout(spark, tmp_path):
+    """A version pinned before a rebucket is read in its own bucket layout,
+    so its keys must be routed with its own bucket count, not the head's."""
+    pipe = _build(spark, tmp_path, "union_agg")  # 16 buckets
+    keys = _some_keys(pipe, n=6)
+    v = pipe.table.version
+    before = sorted(map(tuple, lookup_keys(spark, pipe.table, keys).collect()))
+    assert len(before) == len(keys)
+    pipe.rebucket(4)
+    assert sorted(map(tuple, lookup_keys(spark, pipe.table, keys, version=v).collect())) == before
+    assert sorted(map(tuple, lookup_keys(spark, pipe.table, keys).collect())) == before
+
+
+def _job_id_after_marker(spark):
+    """Id of a just-finished marker job (found through its job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("lookup-job-guard", "marker")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup("lookup-job-guard"))
+
+
+def _jobs_since(spark, job0):
+    """Jobs started after ``job0``: job ids are consecutive, so probe
+    forward until one is missing (the perfbench tracer's count)."""
+    tracker = spark.sparkContext.statusTracker()
+    j = job0
+    while tracker.getJobInfo(j + 1) is not None:
+        j += 1
+    return j - job0
+
+
+def test_lookup_starts_no_spark_job(spark, tmp_path):
+    """Building the lazy lookup DataFrame runs nothing: the buckets are
+    routed on the driver. Counted twice — the count must repeat exactly —
+    and the counter itself must see the read's job once it is collected."""
+    for strategy in ("union_agg", "mor"):
+        pipe = _build(spark, tmp_path / strategy, strategy)
+        keys = _some_keys(pipe, n=6)
+        counts = []
+        for _ in range(2):
+            job0 = _job_id_after_marker(spark)
+            df = lookup_keys(spark, pipe.table, keys)
+            counts.append(_jobs_since(spark, job0))
+        assert counts == [0, 0], (strategy, counts)
+        df.collect()
+        assert _jobs_since(spark, job0) > 0

@@ -12,7 +12,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from kf_etl_clin_portal_spark.lake.load import append
+from kf_etl_clin_portal_spark.lake.load import append, rebucket
 from kf_etl_clin_portal_spark.lake.merge import read_live, read_merged
 from kf_etl_clin_portal_spark.lake.scan import plan_scan, read_where
 from kf_etl_clin_portal_spark.lake.table import SnapshotTable
@@ -97,6 +97,27 @@ def test_in_list_expands_key_combos(spark, table):
     assert len(got) == 2  # p40→r0, p41→r1 by construction (id % 5)
 
 
+def test_int_key_point_predicate_prunes_exactly(spark, tmp_path):
+    """An IntegerType key is hashed as Spark hashes an int column (hashInt),
+    so a point predicate reads its one bucket and finds its row; a literal
+    of another type prunes nothing rather than guess a bucket."""
+    df = spark.range(0, 400).select(
+        F.col("id").cast("int").alias("pid"), F.col("id").alias("seq")
+    )
+    t = SnapshotTable.create(str(tmp_path / "ik"), df.schema, key_cols=["pid"], num_buckets=8)
+    append(spark, t, df)
+    for v in (0, 7, 123, 399):
+        pred = f"pid = {v}"
+        plan = plan_scan(spark, t, pred)
+        assert plan["buckets"] is not None and len(plan["buckets"]) == 1
+        df = read_where(spark, t, pred, plan=plan)
+        scanned = {int(re.search(r"/b=(\d+)/", f).group(1)) for f in df.inputFiles()}
+        assert scanned <= set(plan["buckets"])
+        assert _rows(df) == [(v, v)]
+    assert plan_scan(spark, t, "pid = 7.0")["buckets"] is None
+    assert plan_scan(spark, t, "pid IN (7, '8')")["buckets"] is None
+
+
 def test_impossible_predicate_reads_nothing(spark, table):
     plan = plan_scan(spark, table, "seq > 10 AND seq < 5")
     assert plan["empty"] and plan["files_selected"] == 0
@@ -116,6 +137,12 @@ def test_pinned_version_plans_against_that_snapshot(spark, table):
     assert got == want
     # current-version read sees the new batch, pinned one must not
     assert len(_rows(read_where(spark, table, pred))) == len(want) + 1000
+    # a pinned point read keeps its own bucket layout across a rebucket
+    rebucket(spark, table, 2)
+    point = "repo = 'r3' AND path = 'p1233'"
+    got = _rows(read_where(spark, table, point, version=v))
+    assert got == _rows(read_live(spark, table, version=v).where(F.expr(point)))
+    assert len(got) == 1
 
 
 def test_mor_snapshot_degrades_to_bucket_pruning_only(spark, tmp_path):
